@@ -26,7 +26,11 @@ def main() -> None:
         default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
     )
     ap.add_argument(
-        "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        "--cpus",
+        type=int,
+        default=int(
+            os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+        ),
     )
     ap.add_argument("--queries", required=True, help="comma-separated subset")
     ap.add_argument("--reps", type=int, default=1)
@@ -68,7 +72,12 @@ def main() -> None:
             times.append(round(time.time() - t0, 3))
             spark.sparkContext.setJobDescription(None)
         out[name] = times
-    print(json.dumps({"sf_dir": args.sf_dir, "cpus": args.cpus, "times": out}))
+    print(json.dumps({
+        "sf_dir": args.sf_dir,
+        "cpus": args.cpus,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "times": out,
+    }))
     spark.stop()
 
 

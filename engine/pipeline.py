@@ -178,10 +178,13 @@ def extract_features(
     #   ENSURE_REQUIREMENTS exchange be the ONLY shuffle of the pass —
     #   at 100 TB a second full-width shuffle would roughly double the
     #   dominant cost;
-    # - narrow input (few/small files — scan coalesces to 1-2 tasks,
-    #   which would run the kernel serially; measured a hard ~16 s
-    #   floor at 1.5M rows): repartition FIRST and accept the extra
-    #   exchange — kernel parallelism dominates locally.
+    # - narrow input (fewer scan tasks than cores — few/small files
+    #   coalesce to 1-2 tasks, which would run the kernel serially;
+    #   measured a hard ~16 s floor at 1.5M rows): repartition FIRST and
+    #   accept the extra exchange — kernel parallelism dominates locally.
+    #
+    # The session's default shuffle width is 2 × cores
+    # (engine/session.py), so `n_part // 2` is the core count.
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     if repartition_before_text is None:
         scan_parts = good.rdd.getNumPartitions()

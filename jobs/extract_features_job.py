@@ -93,8 +93,10 @@ def main() -> None:
     from engine.session import build_session
     from engine.tableio import TableIO
 
-    # under spark-submit a session already exists with the cluster's
-    # master; standalone we build local[*]
+    # reuse a live session (tests, notebooks); under spark-submit
+    # build_session keeps the submitted master, standalone it builds
+    # local[*] (or local[$SPARK_GRAFT_CPUS]); shuffle partitions default
+    # to 2 × the cores either way
     active = SparkSession.getActiveSession()
     spark = active or build_session(app_name=f"extract-features-{args.job_id}")
     spark.conf.set("spark.sql.session.timeZone", "UTC")

@@ -8,7 +8,7 @@ from engine.session import build_session
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session(app_name="engine-tests", master="local[4]", shuffle_partitions=8)
+    s = build_session(app_name="engine-tests", master="local[4]")
     yield s
     s.stop()
 
